@@ -125,6 +125,64 @@ def test_mapside_verify_matches_join_path(spark):
     assert fast.count() > 0
 
 
+def test_mapside_lookups_drop_absent_ids_like_the_join_path(spark):
+    """A candidate id missing from the feature table drops its pair on
+    every broadcast map-side verify, exactly as the equi-join path does.
+    The absent ids 0 and 5 would otherwise read their sorted neighbours 1
+    and 6 (twins of each other, so the bogus pairs would verify), and 99
+    would index past the end."""
+    from who_owns_mass_processing_spark.functions import vectors as Vec
+    from who_owns_mass_processing_spark.operators import verify as V
+
+    codes = {1: [1, 2, 3, 4, 5], 2: [1, 2, 3, 4, 6], 3: [10, 11, 12],
+             4: [10, 11, 12, 13], 6: [1, 2, 3, 4, 5]}
+    minhash = {1: [1, 2, 3, 4], 2: [1, 2, 3, 5], 3: [9, 9, 9, 9],
+               4: [9, 9, 9, 8], 6: [1, 2, 3, 4]}
+    feats = spark.createDataFrame(
+        [
+            (i, codes[i], minhash[i], [float(x) for x in minhash[i]],
+             [f"{c:02d}" for c in codes[i]])
+            for i in codes
+        ],
+        "_sid bigint, codes array<bigint>, minhash array<bigint>, "
+        "vec array<double>, fps array<string>",
+    )
+    cands = spark.createDataFrame(
+        [(1, 2), (3, 4), (1, 6), (1, 5), (0, 1), (4, 99)], "a bigint, b bigint"
+    )
+    n = len(codes)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    cases = {
+        "jaccard": (
+            V.verify_jaccard(cands, feats, "_sid", "codes", 0.5,
+                             minhash_col="minhash", num_perm=4, features_rows=n),
+            V.verify_jaccard(cands, feats, "_sid", "codes", 0.5,
+                             minhash_col="minhash", num_perm=4),
+        ),
+        "containment": (
+            V.containment_verify_mapside(cands, feats, "_sid", "codes", 0.5, features_rows=n),
+            V.containment_verify_join(cands, feats, "_sid", "codes", 0.5),
+        ),
+        "winnow": (
+            V.winnow_verify_mapside(cands, feats, "_sid", "fps", 2, 1, features_rows=n),
+            V.winnow_verify_join(cands, feats, "_sid", "fps", 1),
+        ),
+        "cosine": (
+            Vec._cosine_pairs_mapside(cands, Vec._build_cosine_mapside_bvar(feats, "_sid", "vec")),
+            Vec._cosine_pairs_join(cands, feats, "_sid", "vec"),
+        ),
+    }
+    for name, (mapside, join) in cases.items():
+        assert "MapInArrow" in mapside._jdf.queryExecution().executedPlan().toString(), name
+        got = rows(mapside)
+        assert got == rows(join), name
+        ids = {int(x) for r in got for x in r[:2]}
+        assert {1, 2, 3, 4, 6} <= ids and not ids & {0, 5, 99}, name
+
+
 def test_hamming_value_emitted_and_salting_invariant(spark):
     """r6 wave-3 gate: hamming_pairs emits the fused popcount distance
     with every pair (no feature re-join), and the emitted (a, b, hamming)
@@ -137,10 +195,13 @@ def test_hamming_value_emitted_and_salting_invariant(spark):
 
     rng = np.random.default_rng(11)
     hashes = rng.integers(0, 2**62, size=40, dtype=np.int64)
-    # 3 near-dup clones of hash[0] within radius 2, plus two bands so the
-    # same close pair appears in two buckets (cross-band duplicate)
-    hashes[1] = hashes[0] ^ 0b11
-    hashes[2] = hashes[0] ^ 0b1
+    # 3 near-dup clones of hash[0], differing only above the 16 band-hash
+    # bits so all four share a bucket per band (clones 1 and 3 sit 3 bits
+    # apart: the radius rejects them); two bands so the same close pair
+    # appears in two buckets (cross-band duplicate)
+    hashes[1] = hashes[0] ^ (0b11 << 20)
+    hashes[2] = hashes[0] ^ (0b1 << 20)
+    hashes[3] = hashes[0] ^ (0b1 << 40)
     rows = []
     for band in (0, 1):
         for i, h in enumerate(hashes):
@@ -150,9 +211,12 @@ def test_hamming_value_emitted_and_salting_invariant(spark):
     )
     expect = None
     for cap in (1000, 3):  # unsalted vs salted (clone bucket splits)
-        pairs, _ = hamming_pairs(df, "id", "h", radius=2, cap=cap, hard_cap=10**6)
+        pairs, metrics = hamming_pairs(df, "id", "h", radius=2, cap=cap, hard_cap=10**6)
         got = sorted(map(tuple, pairs.toPandas().values))
+        assert len(got) >= 3
         assert all(hm <= 2 for _, _, hm in got)
+        salted = {r.bucket_class for r in metrics.collect()} >= {"salted"}
+        assert salted == (cap == 3)
         # values match a direct popcount recompute
         hs = {i: int(h) for i, h in enumerate(hashes)}
         for a, b, hm in got:

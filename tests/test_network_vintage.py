@@ -85,6 +85,30 @@ def test_catalog_append_accumulates(spark, tmp_path):
     assert sorted(r.x for r in cat2.read("t").collect()) == [1, 2, 3]
 
 
+def test_catalog_append_counts_rows_from_footers(spark, tmp_path, monkeypatch):
+    """Each real append bumps the snapshot id and records the running row
+    total from the parquet footers, with no count job."""
+    cat = StageCatalog(spark, str(tmp_path), "fp1")
+    cat.append("t", spark.createDataFrame(pd.DataFrame({"x": [1, 2]})))
+    batches = [
+        spark.createDataFrame(pd.DataFrame({"x": [3, 4, 5]})),
+        spark.createDataFrame(pd.DataFrame({"x": [6]})),
+    ]
+
+    def no_count(self):
+        raise AssertionError("append must not run a count job")
+
+    monkeypatch.setattr(type(batches[0]), "count", no_count)
+    snaps = [cat._manifest["stages"]["t"]["snapshot_id"]]
+    for df in batches:
+        cat.append("t", df)
+        snaps.append(cat._manifest["stages"]["t"]["snapshot_id"])
+    assert snaps == sorted(set(snaps))
+    assert cat._manifest["stages"]["t"]["rows"] == 2 + 3 + 1
+    assert StageCatalog(spark, str(tmp_path), "fp1").rows("t") == 6
+    assert sorted(r.x for r in cat.read("t").collect()) == [1, 2, 3, 4, 5, 6]
+
+
 def test_catalog_overwrite_is_atomic(spark, tmp_path, monkeypatch):
     """Kill mid-overwrite must never leave a manifest entry pointing at
     partial data (ADVICE round 1)."""

@@ -19,7 +19,10 @@ No code is ported from the reference; reference file:line citations in
 docstrings exist only so the parity of *semantics* can be audited.
 """
 
+from who_owns_mass_processing_spark import _zipcache
 from who_owns_mass_processing_spark.config import DedupeConfig
+
+_zipcache.install()
 
 __all__ = ["DedupeConfig"]
 __version__ = "0.1.0"

@@ -54,10 +54,6 @@ class DedupeConfig:
     cc_max_iterations: int = 50        # label-propagation fixpoint bound
     cc_checkpoint_every: int = 5       # localCheckpoint cadence (lineage cut)
 
-    # --- execution ----------------------------------------------------------
-    shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 128   # image `bytes` rows are large (see session.py)
-
     def fingerprint(self) -> str:
         """Stable hash of all semantic knobs — the checkpoint cache key."""
         payload = json.dumps(asdict(self), sort_keys=True).encode()

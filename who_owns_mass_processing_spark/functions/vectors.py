@@ -207,14 +207,7 @@ def ann_lsh_pairs(
     if mapside:
         scored = _cosine_pairs_mapside(cands, bvar_future.result())
     else:
-        fa = slim.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-        fb = slim.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-        cos_udf = cosine_pair_udf()
-        scored = (
-            cands.join(fa, "a")
-            .join(fb, "b")
-            .select("a", "b", cos_udf(F.col("_va"), F.col("_vb")).alias("_cos"))
-        )
+        scored = _cosine_pairs_join(cands, slim, id_col, vec_col)
     return (
         scored.select("a", "b", F.round(F.col("_cos"), 6).alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
@@ -249,21 +242,35 @@ def _build_cosine_mapside_bvar(slim: DataFrame, id_col: str, vec_col: str):
     return slim.sparkSession.sparkContext.broadcast((ids_s, mat, norms))
 
 
+def _cosine_pairs_join(cands: DataFrame, slim: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(a, b) candidate pairs -> (a, b, _cos) via two feature equi-joins
+    and the pair UDF — the unbounded-corpus shape of `_cosine_pairs_mapside`."""
+    fa = slim.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
+    fb = slim.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
+    cos_udf = cosine_pair_udf()
+    return (
+        cands.join(fa, "a")
+        .join(fb, "b")
+        .select("a", "b", cos_udf(F.col("_va"), F.col("_vb")).alias("_cos"))
+    )
+
+
 def _cosine_pairs_mapside(cands: DataFrame, bvar) -> DataFrame:
     """(a, b) candidate pairs -> (a, b, _cos) via a broadcast (n, dim)
     matrix gather — the numpy math is the same einsum as
     `cosine_pair_udf`, so values are bit-identical."""
     import pyarrow as pa
 
+    from who_owns_mass_processing_spark.operators.verify import _lookup_pairs
+
     def gen(batches):
         ids_b, mat_b, norms_b = bvar.value
         for batch in batches:
             a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+            a, b, ia, ib = _lookup_pairs(ids_b, a, b)
             if len(a) == 0:
                 continue
-            ia = np.searchsorted(ids_b, a)
-            ib = np.searchsorted(ids_b, b)
             va = mat_b[ia]
             vb = mat_b[ib]
             num = np.einsum("ij,ij->i", va, vb)

@@ -353,6 +353,7 @@ def winnow_pairs(
     from who_owns_mass_processing_spark.operators.verify import (
         BROADCAST_VERIFY_MAX_ROWS,
         build_winnow_mapside_bvar,
+        winnow_verify_join,
         winnow_verify_mapside,
     )
 
@@ -384,18 +385,7 @@ def winnow_pairs(
             features_rows=n_fps, bvar_future=bvar_future,
         )
     if sid_pairs is None:
-        fa = fps.select(F.col("_sid").alias("a"), F.col("_fps").alias("_fa"))
-        fb = fps.select(F.col("_sid").alias("b"), F.col("_fps").alias("_fb"))
-        sid_pairs = (
-            cands.join(fa, "a")
-            .join(fb, "b")
-            .select(
-                "a",
-                "b",
-                F.size(F.array_intersect("_fa", "_fb")).cast("long").alias("n_shared"),
-            )
-            .where(F.col("n_shared") >= F.lit(int(min_shared)))
-        )
+        sid_pairs = winnow_verify_join(cands, fps, "_sid", "_fps", int(min_shared))
     pairs = decode_pair_ids(sid_pairs, fps.select("_sid", id_col), id_col)
     return pairs, metrics
 
@@ -461,6 +451,7 @@ def containment_pairs_lsh(
     from who_owns_mass_processing_spark.operators.verify import (
         BROADCAST_VERIFY_MAX_ROWS,
         build_containment_mapside_bvar,
+        containment_verify_join,
         containment_verify_mapside,
     )
 
@@ -490,25 +481,7 @@ def containment_pairs_lsh(
             features_rows=n_reps, bvar_future=bvar_future,
         )
     if rep_hits is None:
-        ca = rep_sigs.select(F.col("_sid").alias("a"), F.col("codes").alias("_ca"))
-        cb = rep_sigs.select(F.col("_sid").alias("b"), F.col("codes").alias("_cb"))
-        joined = (
-            cands.join(ca, "a")
-            .join(cb, "b")
-            .select(
-                "a", "b", "_ca", "_cb",
-                F.size(F.array_intersect("_ca", "_cb")).cast("double").alias("_inter"),
-            )
-        )
-        fwd = joined.where(F.size("_ca") > 0).select(
-            F.col("a").alias("ra"), F.col("b").alias("rb"),
-            F.round(F.col("_inter") / F.size("_ca").cast("double"), 6).alias("containment"),
-        )
-        bwd = joined.where(F.size("_cb") > 0).select(
-            F.col("b").alias("ra"), F.col("a").alias("rb"),
-            F.round(F.col("_inter") / F.size("_cb").cast("double"), 6).alias("containment"),
-        )
-        rep_hits = fwd.unionByName(bwd).where(F.col("containment") >= threshold)
+        rep_hits = containment_verify_join(cands, rep_sigs, "_sid", "codes", threshold)
     # expand rep-level verdicts to members (identical text => identical
     # shingle sets => identical containment) + ordered within-group pairs;
     # surrogate rep ids resolve to fingerprints here (the member join key)

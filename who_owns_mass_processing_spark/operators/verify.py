@@ -136,6 +136,21 @@ def _spark_round6(x: np.ndarray) -> np.ndarray:
     return np.floor(x * 1e6 + 0.5 + 1e-9) / 1e6
 
 
+def _lookup_pairs(sids: np.ndarray, a: np.ndarray, b: np.ndarray):
+    """Rows of `a` and `b` in the sorted broadcast id array `sids`, keeping
+    only pairs whose ids are BOTH present — the join path's inner-join
+    semantics.  A bare searchsorted would hand an absent id its
+    neighbour's row (or run off the end).  Returns (a, b, ia, ib)."""
+    if len(sids) == 0:
+        return a[:0], b[:0], a[:0], b[:0]
+    ia = np.minimum(np.searchsorted(sids, a), len(sids) - 1)
+    ib = np.minimum(np.searchsorted(sids, b), len(sids) - 1)
+    keep = (sids[ia] == a) & (sids[ib] == b)
+    if keep.all():
+        return a, b, ia, ib
+    return a[keep], b[keep], ia[keep], ib[keep]
+
+
 def jaccard_mapside_eligible(
     features: DataFrame,
     id_col: str,
@@ -215,10 +230,9 @@ def _verify_jaccard_mapside(
         for batch in batches:
             a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+            a, b, ia, ib = _lookup_pairs(sids_b, a, b)
             if len(a) == 0:
                 continue
-            ia = np.searchsorted(sids_b, a)
-            ib = np.searchsorted(sids_b, b)
             na = lens_b[ia]
             nb = lens_b[ib]
             keep = np.minimum(na, nb).astype(np.float64) >= ratio_floor * np.maximum(
@@ -314,10 +328,9 @@ def containment_verify_mapside(
         for batch in batches:
             a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+            a, b, ia, ib = _lookup_pairs(sids_b, a, b)
             if len(a) == 0:
                 continue
-            ia = np.searchsorted(sids_b, a)
-            ib = np.searchsorted(sids_b, b)
             out_ra: list[int] = []
             out_rb: list[int] = []
             out_c: list[float] = []
@@ -358,6 +371,33 @@ def containment_verify_mapside(
     return pairs.select("a", "b").mapInArrow(
         gen, "ra bigint, rb bigint, containment double"
     )
+
+
+def containment_verify_join(
+    pairs: DataFrame, features: DataFrame, id_col: str, shingle_col: str, threshold: float
+) -> DataFrame:
+    """Equi-join containment verify, the unbounded-corpus shape of
+    `containment_verify_mapside`: both ordered directions (ra, rb,
+    containment), empty-codes sides emit nothing."""
+    ca = features.select(F.col(id_col).alias("a"), F.col(shingle_col).alias("_ca"))
+    cb = features.select(F.col(id_col).alias("b"), F.col(shingle_col).alias("_cb"))
+    joined = (
+        pairs.join(ca, "a")
+        .join(cb, "b")
+        .select(
+            "a", "b", "_ca", "_cb",
+            F.size(F.array_intersect("_ca", "_cb")).cast("double").alias("_inter"),
+        )
+    )
+    fwd = joined.where(F.size("_ca") > 0).select(
+        F.col("a").alias("ra"), F.col("b").alias("rb"),
+        F.round(F.col("_inter") / F.size("_ca").cast("double"), 6).alias("containment"),
+    )
+    bwd = joined.where(F.size("_cb") > 0).select(
+        F.col("b").alias("ra"), F.col("a").alias("rb"),
+        F.round(F.col("_inter") / F.size("_cb").cast("double"), 6).alias("containment"),
+    )
+    return fwd.unionByName(bwd).where(F.col("containment") >= threshold)
 
 
 def build_winnow_mapside_bvar(
@@ -443,10 +483,9 @@ def winnow_verify_mapside(
         for batch in batches:
             a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+            a, b, ia, ib = _lookup_pairs(sids_b, a, b)
             if len(a) == 0:
                 continue
-            ia = np.searchsorted(sids_b, a)
-            ib = np.searchsorted(sids_b, b)
             out_a: list[int] = []
             out_b: list[int] = []
             out_n: list[int] = []
@@ -475,6 +514,25 @@ def winnow_verify_mapside(
 
     return pairs.select("a", "b").mapInArrow(
         gen, "a bigint, b bigint, n_shared bigint"
+    )
+
+
+def winnow_verify_join(
+    pairs: DataFrame, features: DataFrame, id_col: str, fps_col: str, min_shared: int
+) -> DataFrame:
+    """Equi-join winnow verify, the unbounded-corpus shape of
+    `winnow_verify_mapside`: (a, b, n_shared) with n_shared >= min_shared."""
+    fa = features.select(F.col(id_col).alias("a"), F.col(fps_col).alias("_fa"))
+    fb = features.select(F.col(id_col).alias("b"), F.col(fps_col).alias("_fb"))
+    return (
+        pairs.join(fa, "a")
+        .join(fb, "b")
+        .select(
+            "a",
+            "b",
+            F.size(F.array_intersect("_fa", "_fb")).cast("long").alias("n_shared"),
+        )
+        .where(F.col("n_shared") >= F.lit(int(min_shared)))
     )
 
 

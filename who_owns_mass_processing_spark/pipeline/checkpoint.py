@@ -146,17 +146,17 @@ class StageCatalog:
         records the running count and bumps the snapshot id, and readers
         of an existing complete stage see old+new rows.  First append on
         a missing stage creates it."""
+        if not self.is_complete(stage):
+            return self.write(stage, df)
         path = self._stage_path(stage)
-        if self.is_complete(stage):
-            df.write.mode("append").parquet(path)
-            out = self.spark.read.parquet(path)
+        df.write.mode("append").parquet(path)
+        with self._lock:
             self._manifest["snapshot_seq"] += 1
             entry = self._manifest["stages"][stage]
             entry["snapshot_id"] = self._manifest["snapshot_seq"]
-            entry["rows"] = out.count()
+            entry["rows"] = _parquet_dir_rows(path)  # footers, as in write(): no job
             self._save_manifest()
-            return out
-        return self.write(stage, df)
+        return self.read(stage)
 
     def rows(self, stage: str) -> int:
         """Row count from the stage manifest — zero Spark jobs.  Every

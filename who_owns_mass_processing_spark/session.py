@@ -13,6 +13,15 @@ Design notes for scale (graded explicitly):
   round-5 flat 128-row cap throttled every narrow-row pandas UDF to
   ~30x more batch round-trips than needed.
 * ``spark.sql.shuffle.partitions`` sized by caller (tests 8, bench = cores).
+* Per-task Python-worker cost: PySpark's worker calls
+  ``importlib.invalidate_caches()`` before every task, and before CPython
+  3.12 (gh-103200) each zipimporter on ``pyspark.zip`` then re-reads the
+  archive's ~26.7k-entry directory — ~0.2 CPU-s per task, most of a tiny
+  UDF task.  No session conf can change the worker bootstrap (the daemon
+  only honours ``spark.python.worker.module`` values under ``pyspark``),
+  so the stat-gated fix lives in the package (``_zipcache.py``): every
+  engine UDF unpickles package globals, which installs it in each reused
+  worker on its first task.
 * An Iceberg catalog is configured *only if* the runtime has the Iceberg
   Spark runtime jar (this sandbox does not); otherwise the checkpoint
   layer (pipeline/checkpoint.py) uses its parquet stage-table catalog,
