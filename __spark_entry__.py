@@ -26,6 +26,7 @@ from who_owns_mass_processing_spark.operators import dedupe as D
 from who_owns_mass_processing_spark.operators import joins as J
 from who_owns_mass_processing_spark.operators.blocking import spread_small_input
 from who_owns_mass_processing_spark.operators.connected_components import connected_components
+from who_owns_mass_processing_spark.sources.parquet import read_parquet
 
 # Oracle-facing config: bands=32 (r=4) makes P(miss | J>=0.8) ~ 5e-8 per
 # pair, so LSH output equals the exact all-pairs SQL at correctness scale.
@@ -35,7 +36,7 @@ CFG = DedupeConfig(bands=32)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -806,7 +807,7 @@ def q_embedding_topk_ivf(spark, sf_dir):
         e, q, "vec_id", "embedding", "query_id", "qvec", 5,
         n_cells=16, n_probe=10, seed=CFG.minhash_seed,
         centroids=load_ivf_centroids(cent_path),
-        cell_assignments=spark.read.parquet(cells_path),
+        cell_assignments=read_parquet(spark, cells_path),
     ).select("query_id", "vec_id", "cos_sim", "rank")
 
 

@@ -125,3 +125,41 @@ def test_containment_lsh_superset_of_exact_oracle(spark):
     assert exact_set <= lsh_set, f"missing {sorted(exact_set - lsh_set)[:5]}"
     # exact verify => no false positives either
     assert lsh_set == exact_set
+
+
+def test_side_thread_broadcast_destroyed_when_census_raises(spark, monkeypatch):
+    import threading
+
+    import pytest
+
+    from who_owns_mass_processing_spark.operators import dedupe as D
+    from who_owns_mass_processing_spark.operators import verify as V
+
+    started, done, built = threading.Event(), threading.Event(), []
+    real_build = V.build_jaccard_mapside_bvar
+
+    def recording_build(*args, **kwargs):
+        started.set()
+        try:
+            built.append(real_build(*args, **kwargs))
+        finally:
+            done.set()
+        return built[-1]
+
+    class CensusFailed(RuntimeError):
+        pass
+
+    def failing_candidate_pairs(*args, **kwargs):
+        # fail while the side thread is mid-build, so it can be neither
+        # cancelled nor already consumed
+        assert started.wait(60)
+        raise CensusFailed("census collect failed")
+
+    monkeypatch.setattr(V, "build_jaccard_mapside_bvar", recording_build)
+    monkeypatch.setattr(D, "candidate_pairs", failing_candidate_pairs)
+    sigs = minhash_signatures(_docs(spark), "doc_id", "text", CFG)
+    with pytest.raises(CensusFailed, match="census collect failed"):
+        D.rep_pairs_from_sigs(sigs, "doc_id", CFG)
+    assert done.wait(60)
+    assert len(built) == 1 and built[0] is not None
+    assert not built[0]._jbroadcast.isValid()

@@ -12,7 +12,10 @@ dominated by one-time costs that a real cluster amortizes over hours):
   * each parallelism level is a fresh subprocess (fresh JVM);
   * inside it, the FULL measured job runs once as a discarded warm-up
     (JIT + codegen compile + python-worker spawn + shuffle-service
-    warm-up), then `SCALING_REPS` (default 3) measured repetitions;
+    warm-up; codegen stays compiled only because session.py sizes the
+    generated-class cache above the working set — at Spark's default
+    100 entries every rep recompiled), then `SCALING_REPS` (default 3)
+    measured repetitions;
   * the reported figure is the MEDIAN of the measured reps — steady-
     state throughput, which is what 10^12-scale wall-clock is made of;
   * cold-run numbers are reported alongside for transparency;
@@ -243,7 +246,9 @@ def run_alternating(n_base: int, reps: int) -> tuple[dict, dict]:
       (spark sets -Xms=-Xmx for local drivers, so driver.memory is
       committed up front).  Fresh default-memory JVMs per unit avoid
       both failure modes and cost only JIT/codegen warm-up, which the
-      in-unit warm-up run pays explicitly for BOTH levels alike.
+      in-unit warm-up run pays explicitly for BOTH levels alike (codegen
+      only while the generated-class cache holds the working set; see
+      session.py).
       The complementary fix lives in synth.py: the corpus is written
       with 1024-row (~15 MB) parquet row groups, because a scan task
       buffers one whole row-group column chunk on heap — pyarrow's
@@ -401,7 +406,8 @@ UDFs) + LSH banding + salted candidates + exact Jaccard/Hamming/PSNR
 verify — the throughput-dominant path at 10^12 scale.  Figures are the
 MEDIAN of {reps} steady-state repetitions after one discarded warm-up
 run per JVM (JIT/codegen/python-worker spawn are one-time costs a real
-cluster amortizes over hours), with checkpoint blocks explicitly freed
+cluster amortizes over hours; codegen only because the session's
+generated-class cache holds the working set), with checkpoint blocks explicitly freed
 between reps so later reps measure the job, not accumulated GC
 pressure.  Connected components is reported separately (its
 per-iteration driver sync is latency-bound, not throughput-bound).

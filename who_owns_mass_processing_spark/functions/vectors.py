@@ -196,18 +196,14 @@ def ann_lsh_pairs(
         and n_corpus * int(sample["d"]) <= 12_500_000
         and df.schema[id_col].dataType.simpleString() == "bigint"
     )
-    bvar_future = None
-    if mapside:
-        from concurrent.futures import ThreadPoolExecutor
+    from who_owns_mass_processing_spark.operators.verify import side_built_bvar
 
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(_build_cosine_mapside_bvar, slim, id_col, vec_col)
-        pool.shutdown(wait=False)
-    cands, _metrics = candidate_pairs(b, id_col, cap=cap, hard_cap=hard_cap)
-    if mapside:
-        scored = _cosine_pairs_mapside(cands, bvar_future.result())
-    else:
-        scored = _cosine_pairs_join(cands, slim, id_col, vec_col)
+    with side_built_bvar(mapside, _build_cosine_mapside_bvar, slim, id_col, vec_col) as bvar_future:
+        cands, _metrics = candidate_pairs(b, id_col, cap=cap, hard_cap=hard_cap)
+        if mapside:
+            scored = _cosine_pairs_mapside(cands, bvar_future.result())
+        else:
+            scored = _cosine_pairs_join(cands, slim, id_col, vec_col)
     return (
         scored.select("a", "b", F.round(F.col("_cos"), 6).alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)

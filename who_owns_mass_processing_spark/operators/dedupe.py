@@ -149,39 +149,35 @@ def rep_pairs_from_sigs(
     # phase below (guide §2.6): rep_sigs is already checkpointed, so the
     # side thread's collect job runs while candidate_pairs does its
     # census collects and checkpoint
-    from concurrent.futures import ThreadPoolExecutor
-
     from who_owns_mass_processing_spark.operators.verify import (
         build_jaccard_mapside_bvar,
         jaccard_mapside_eligible,
+        side_built_bvar,
     )
 
-    bvar_future = None
-    if jaccard_mapside_eligible(features, "_sid", n_rows, "minhash", cfg.num_perm):
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(
-            build_jaccard_mapside_bvar,
-            features, "_sid", "codes", "minhash", cfg.num_perm,
-            features_rows=n_rows,
-        )
-        pool.shutdown(wait=False)
-    bands = band_explode(rep_sigs, "minhash", "_sid", cfg.bands, cfg.rows_per_band)
-    cands, metrics = candidate_pairs(
-        bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.stop_band_threshold(n_rows)
-    )
-    verified = verify_jaccard(
-        cands,
-        features,
-        "_sid",
-        "codes",
-        cfg.jaccard_threshold,
-        minhash_col="minhash",
-        num_perm=cfg.num_perm,
-        # n_rows upper-bounds the rep count: enables the broadcast
-        # map-side verify on bounded corpora (join path above the bound)
+    with side_built_bvar(
+        jaccard_mapside_eligible(features, "_sid", n_rows, "minhash", cfg.num_perm),
+        build_jaccard_mapside_bvar,
+        features, "_sid", "codes", "minhash", cfg.num_perm,
         features_rows=n_rows,
-        mapside_bvar_future=bvar_future,
-    )
+    ) as bvar_future:
+        bands = band_explode(rep_sigs, "minhash", "_sid", cfg.bands, cfg.rows_per_band)
+        cands, metrics = candidate_pairs(
+            bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.stop_band_threshold(n_rows)
+        )
+        verified = verify_jaccard(
+            cands,
+            features,
+            "_sid",
+            "codes",
+            cfg.jaccard_threshold,
+            minhash_col="minhash",
+            num_perm=cfg.num_perm,
+            # n_rows upper-bounds the rep count: enables the broadcast
+            # map-side verify on bounded corpora (join path above the bound)
+            features_rows=n_rows,
+            mapside_bvar_future=bvar_future,
+        )
     # decode surrogates AND attach rep fingerprints in the same two joins;
     # (a, b) re-normalized to original-id order with fps swapped in step
     dm = rep_sigs.select("_sid", F.col(id_col), "fingerprint")
@@ -348,42 +344,38 @@ def winnow_pairs(
             T.winnow_fingerprints(F.col(text_col), k=k, w=w).alias("_fps"),
         ).where(F.size("_fps") > 0)
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     from who_owns_mass_processing_spark.operators.verify import (
         BROADCAST_VERIFY_MAX_ROWS,
         build_winnow_mapside_bvar,
+        side_built_bvar,
         winnow_verify_join,
         winnow_verify_mapside,
     )
 
     n_fps = fps.count()  # checkpointed: cheap count
-    bvar_future = None
-    if n_fps <= BROADCAST_VERIFY_MAX_ROWS and k <= 8:
-        # overlap the feature collect + pack + broadcast with the
-        # census/cell phase below (guide §2.6; see rep_pairs_from_sigs)
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(
-            build_winnow_mapside_bvar,
-            fps.select("_sid", "_fps"), "_sid", "_fps", k, features_rows=n_fps,
-        )
-        pool.shutdown(wait=False)
-    bands = fps.select(
-        F.col("_sid"),
-        F.lit(0).alias("band_id"),
-        F.explode("_fps").alias("_g"),
-    ).select("_sid", "band_id", F.xxhash64("_g").alias("band_hash"))
-    cands, metrics = candidate_pairs(bands, "_sid", cap=cap, hard_cap=hard_cap)
-    sid_pairs = None
-    if n_fps <= BROADCAST_VERIFY_MAX_ROWS:
-        # broadcast map-side verify (operators/verify.py): fingerprints
-        # pack into order-preserving uint64, intersect counts are
-        # integers — exact; None = k > 8 or bytes over the cap (large
-        # corpora fail the byte PRE-gate without a driver collect)
-        sid_pairs = winnow_verify_mapside(
-            cands, fps.select("_sid", "_fps"), "_sid", "_fps", k, int(min_shared),
-            features_rows=n_fps, bvar_future=bvar_future,
-        )
+    # overlap the feature collect + pack + broadcast with the census/cell
+    # phase below (guide §2.6; see rep_pairs_from_sigs)
+    with side_built_bvar(
+        n_fps <= BROADCAST_VERIFY_MAX_ROWS and k <= 8,
+        build_winnow_mapside_bvar,
+        fps.select("_sid", "_fps"), "_sid", "_fps", k, features_rows=n_fps,
+    ) as bvar_future:
+        bands = fps.select(
+            F.col("_sid"),
+            F.lit(0).alias("band_id"),
+            F.explode("_fps").alias("_g"),
+        ).select("_sid", "band_id", F.xxhash64("_g").alias("band_hash"))
+        cands, metrics = candidate_pairs(bands, "_sid", cap=cap, hard_cap=hard_cap)
+        sid_pairs = None
+        if n_fps <= BROADCAST_VERIFY_MAX_ROWS:
+            # broadcast map-side verify (operators/verify.py): fingerprints
+            # pack into order-preserving uint64, intersect counts are
+            # integers — exact; None = k > 8 or bytes over the cap (large
+            # corpora fail the byte PRE-gate without a driver collect)
+            sid_pairs = winnow_verify_mapside(
+                cands, fps.select("_sid", "_fps"), "_sid", "_fps", k, int(min_shared),
+                features_rows=n_fps, bvar_future=bvar_future,
+            )
     if sid_pairs is None:
         sid_pairs = winnow_verify_join(cands, fps, "_sid", "_fps", int(min_shared))
     pairs = decode_pair_ids(sid_pairs, fps.select("_sid", id_col), id_col)
@@ -446,40 +438,36 @@ def containment_pairs_lsh(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     from who_owns_mass_processing_spark.operators.verify import (
         BROADCAST_VERIFY_MAX_ROWS,
         build_containment_mapside_bvar,
         containment_verify_join,
         containment_verify_mapside,
+        side_built_bvar,
     )
 
     n_reps = rep_sigs.count()  # checkpointed: a cheap RDD count
-    bvar_future = None
-    if n_reps <= BROADCAST_VERIFY_MAX_ROWS:
-        # overlap the feature collect + broadcast with the census/cell
-        # phase below (guide §2.6; see rep_pairs_from_sigs)
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(
-            build_containment_mapside_bvar,
-            rep_sigs.select("_sid", "codes"), "_sid", "codes", features_rows=n_reps,
+    # overlap the feature collect + broadcast with the census/cell phase
+    # below (guide §2.6; see rep_pairs_from_sigs)
+    with side_built_bvar(
+        n_reps <= BROADCAST_VERIFY_MAX_ROWS,
+        build_containment_mapside_bvar,
+        rep_sigs.select("_sid", "codes"), "_sid", "codes", features_rows=n_reps,
+    ) as bvar_future:
+        bands = band_explode(rep_sigs, "minhash", "_sid", n_bands, n_rows)
+        cands, metrics = candidate_pairs(
+            bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.band_bucket_hard_cap
         )
-        pool.shutdown(wait=False)
-    bands = band_explode(rep_sigs, "minhash", "_sid", n_bands, n_rows)
-    cands, metrics = candidate_pairs(
-        bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.band_bucket_hard_cap
-    )
-    rep_hits = None
-    if n_reps <= BROADCAST_VERIFY_MAX_ROWS:
-        # broadcast map-side verify (same bound class + exactness
-        # argument as the Jaccard tier's, operators/verify.py): one
-        # Arrow pass emits both containment directions; None = the
-        # collected bytes exceeded the broadcast cap -> join path
-        rep_hits = containment_verify_mapside(
-            cands, rep_sigs.select("_sid", "codes"), "_sid", "codes", threshold,
-            features_rows=n_reps, bvar_future=bvar_future,
-        )
+        rep_hits = None
+        if n_reps <= BROADCAST_VERIFY_MAX_ROWS:
+            # broadcast map-side verify (same bound class + exactness
+            # argument as the Jaccard tier's, operators/verify.py): one
+            # Arrow pass emits both containment directions; None = the
+            # collected bytes exceeded the broadcast cap -> join path
+            rep_hits = containment_verify_mapside(
+                cands, rep_sigs.select("_sid", "codes"), "_sid", "codes", threshold,
+                features_rows=n_reps, bvar_future=bvar_future,
+            )
     if rep_hits is None:
         rep_hits = containment_verify_join(cands, rep_sigs, "_sid", "codes", threshold)
     # expand rep-level verdicts to members (identical text => identical

@@ -19,6 +19,9 @@ plain equi-join AQE can re-plan.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -168,6 +171,49 @@ def jaccard_mapside_eligible(
         and features_rows <= BROADCAST_VERIFY_MAX_ROWS
         and features.schema[id_col].dataType.simpleString() == "bigint"
     )
+
+
+class _SideBuild:
+    """The future of a side-thread broadcast build; `result()` hands the
+    broadcast to its consumer, who then owns it."""
+
+    def __init__(self, future):
+        self._future = future
+        self.taken = False
+
+    def result(self):
+        self.taken = True
+        return self._future.result()
+
+    def release(self) -> None:
+        """Cancel an untaken build, or await it and destroy its broadcast."""
+        if self.taken or self._future.cancel():
+            return
+        try:
+            bvar = self._future.result()
+        except Exception:  # the caller's own error is what propagates
+            return
+        if bvar is not None:
+            bvar.destroy()
+
+
+@contextmanager
+def side_built_bvar(enabled: bool, build, *args, **kwargs):
+    """Run a map-side broadcast `build` on a driver side thread, so its
+    collect overlaps the caller's census/cell phase (guide §2.6); yields
+    the future, or None when not `enabled`.  On exit, a build nobody took
+    with `result()` (the caller raised first) is cancelled, or awaited
+    and its broadcast destroyed, so an error leaks neither."""
+    if not enabled:
+        yield None
+        return
+    pool = ThreadPoolExecutor(max_workers=1)
+    side = _SideBuild(pool.submit(build, *args, **kwargs))
+    pool.shutdown(wait=False)
+    try:
+        yield side
+    finally:
+        side.release()
 
 
 def build_jaccard_mapside_bvar(

@@ -28,6 +28,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from who_owns_mass_processing_spark.sources.parquet import read_parquet
+
 
 def _parquet_dir_rows(path: str) -> int:
     """Exact row count of a written parquet directory from file footers —
@@ -92,7 +94,7 @@ class StageCatalog:
 
             schema = StructType.fromJson(json.loads(entry["schema_json"]))
             return self.spark.read.schema(schema).parquet(self._stage_path(stage))
-        return self.spark.read.parquet(self._stage_path(stage))
+        return read_parquet(self.spark, self._stage_path(stage))
 
     def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
         """Atomic stage overwrite: compute into a temp dir, mark the stage

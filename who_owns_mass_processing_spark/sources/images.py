@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from who_owns_mass_processing_spark.sources.parquet import read_parquet
+
 IMAGES_SCHEMA = StructType(
     [
         StructField("image_id", StringType(), False),
@@ -77,7 +79,7 @@ def read_images(
 
     `limit` mirrors the reference's dev-subset slice_head(n=test_count)
     (R/loaders.R:1352)."""
-    df = _check(spark.read.parquet(path), IMAGES_SCHEMA, path)
+    df = _check(read_parquet(spark, path), IMAGES_SCHEMA, path)
     if where is not None:
         df = df.where(where)
     if columns:
